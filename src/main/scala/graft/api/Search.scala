@@ -7,11 +7,16 @@ import org.apache.spark.sql.functions._
   * user-facing surface behind `graft.ops.SearchPack`'s driver queries.
   *
   * Normalization runs through the native `accent_fold` Catalyst
-  * expression (registered by graft.ext.GraftExtensions); the fuzzy score
-  * is a WRatio-style max of levenshtein ratio and 0.95-damped token-sort
-  * ratio. Thresholded levenshtein predicates are rewritten to the
-  * bounded O(k·n) form by graft.ext.BoundedLevenshteinRule — write them
-  * the natural way.
+  * expression and scoring through the native `wratio` expression
+  * ([[graft.functions.WRatio]]), both registered by
+  * graft.ext.GraftExtensions: [[fuzzyScore]] and [[fuzzyTopK]] compile
+  * to one codegen'd call per row. [[fuzzyScoreWith]] and its parts
+  * ([[ratio]], [[tokenSort]], [[partialRatio]]) are the same score
+  * spelled as composed Column expressions — the readable reference the
+  * native node is pinned against, not a second scoring path.
+  * Thresholded levenshtein predicates are rewritten to the bounded
+  * O(k·n) form by graft.ext.BoundedLevenshteinRule — write them the
+  * natural way.
   */
 object Search {
 
@@ -56,17 +61,19 @@ object Search {
     * damped) rather than the full token-sort ratio, so a short query can
     * hit a long multi-token name through its best-matching window. */
   def fuzzyScore(name: Column, query: String): Column =
-    fuzzyScoreWith(name, tokenSort(name), query)
+    call_function("wratio", name, lit(query))
 
-  /** [[fuzzyScore]] with the token-sorted name supplied as its own
-    * column. Use this form when scoring a large frame: pass a
+  /** [[fuzzyScore]] spelled as a composed Column expression, with the
+    * token-sorted name supplied as its own column — value-identical to
+    * the native node on every input but `"" × ""` (where this form's
+    * 0/0 raises under ANSI and the native node scores 0.0); InvariantSpec
+    * pins the parity. The partial legs are interpreted `transform`
+    * lambdas, so this form is for reference and for engines without the
+    * graft extensions, not for scoring large frames. If used, pass a
     * PRE-PROJECTED token-sort column (`df.withColumn("key_ts",
-    * tokenSort(col("key")))`) so the window lambda of the partial
-    * token-sort leg references a bound attribute — expressions inside
-    * `transform` lambdas get no common-subexpression elimination, so an
-    * inline token-sort subtree is re-split/re-sorted once PER WINDOW of
-    * every row (the same O(len²) trap as inline shingling; measured 6.0 s
-    * → ~1 s at sf0.1 for the short-query dispatch). */
+    * tokenSort(col("key")))`): expressions inside lambdas get no
+    * common-subexpression elimination, so an inline token-sort subtree
+    * is re-split/re-sorted once PER WINDOW of every row. */
   def fuzzyScoreWith(name: Column, nameTs: Column, query: String): Column = {
     val q = lit(query)
     val qTs = tokenSort(q)
@@ -86,19 +93,21 @@ object Search {
     df.groupBy(normalizeKey(col(name)).as("key"))
       .agg(count(lit(1)).as("n_ids"), min(col(id)).as("first_id"))
 
-  /** Fuzzy top-k against one query: score everything, threshold, rank
-    * deterministically. Runs as one scan + TakeOrdered (no global sort);
-    * the normalized key and its token-sort are projected once so the
-    * score's window lambdas read attributes (see [[fuzzyScoreWith]]). */
+  /** Fuzzy top-k against one query: score everything with the native
+    * `wratio` node, rank deterministically, threshold. Runs as one scan
+    * + TakeOrdered (no global sort). The threshold sits ABOVE the top-k:
+    * with scores ranked descending, the rows passing `minScore` are a
+    * prefix of the ranking, so top-k-then-filter returns the same rows
+    * in the same order as filter-then-top-k — and a filter below the
+    * projection would be pushed down with the score inlined, scoring
+    * every passing row twice. */
   def fuzzyTopK(df: DataFrame, id: String, name: String,
       query: String, minScore: Double, k: Int): DataFrame =
-    df.select(col(id), col(name), normalizeKey(col(name)).as("__key"))
-      .withColumn("__key_ts", tokenSort(col("__key")))
-      .select(col(id), col(name),
-        fuzzyScoreWith(col("__key"), col("__key_ts"), query).as("score"))
-      .filter(col("score") >= minScore)
+    df.select(col(id), col(name),
+        fuzzyScore(normalizeKey(col(name)), query).as("score"))
       .orderBy(col("score").desc, col(id).asc)
       .limit(k)
+      .filter(col("score") >= minScore)
 
   /** Blocked similarity self-join: equality blocking on `blockKey` of the
     * normalized name, exact bounded edit distance within blocks only —

@@ -7,11 +7,12 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** RapidFuzz-style WRatio (fuzz.WRatio, ref fuzzy_search.py:57) as a
   * native Catalyst expression — the same semantics as the composed
-  * Column form `graft.api.Search.fuzzyScoreWith` (the API scoring path,
-  * `api.Search.fuzzyTopK`), value-identical stage by stage (PropertySpec
-  * pins parity on random strings). The driver top-k queries score
-  * through THIS node: one codegen'd JVM call per row, where the Column
-  * form's partial legs are interpreted higher-order lambdas:
+  * Column reference `graft.api.Search.fuzzyScoreWith`, value-identical
+  * stage by stage (InvariantSpec pins parity on random strings). Every
+  * scoring entry point runs THIS node — the driver top-k queries and
+  * `api.Search.fuzzyScore` / `fuzzyTopK` — one codegen'd JVM call per
+  * row, where the Column form's partial legs are interpreted
+  * higher-order lambdas:
   *
   *  - full  = round(100·(1 − lev(a,b)/max(|a|,|b|)), 6)
   *  - tsr   = round(full-ratio of the token-sorted strings · 0.95, 6)

@@ -255,8 +255,10 @@ object DFGraphAlgs {
   /** [[mat]] + a free row count collected by the checkpoint action
     * itself (named observe, read from the executed plan — see
     * [[matChanged]] for why not Observation()). For loop states with no
-    * convergence flag (PPR's dense rank rows) whose next round still
-    * needs the size for its broadcast decision. −1 under plan-only. */
+    * convergence flag (PPR's dense rank rows) and initial loop states
+    * whose size decides the broadcast path. −1 under plan-only; should
+    * the metric row ever be absent, the count falls back to an explicit
+    * `count()` of the checkpoint (one extra job, the same number). */
   private def matCounted(df: DataFrame): (DataFrame, Long) = {
     if (planOnly(df)) (df, -1L)
     else {
@@ -264,7 +266,7 @@ object DFGraphAlgs {
       val cp = mat(observed)
       val n = observed.queryExecution.observedMetrics.get("__graft_cnt")
         .map(_.getAs[Any]("n").asInstanceOf[Number].longValue)
-        .getOrElse(-1L)
+        .getOrElse(cp.count())
       (cp, n)
     }
   }
@@ -274,6 +276,11 @@ object DFGraphAlgs {
     * early AND returns the full-iters result); never read by query
     * code. */
   private[graft] val lastRoundsRun = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** Hub-salting decisions taken outside plan-only on this JVM (each one
+    * a probe or a caller-supplied bound) — test-only telemetry: GraphSpec
+    * pins that broadcast-path loops never build their lazy hub plan. */
+  private[graft] val saltDecisions = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Vertex-state row count below which per-round state/message frames are
     * broadcast into the edge joins instead of shuffled. localCheckpoint
@@ -295,6 +302,13 @@ object DFGraphAlgs {
   private def bcastLimit(df: DataFrame): Long =
     df.sparkSession.conf.getOption(StateBroadcastLimitConf)
       .map(_.toLong).getOrElse(StateBroadcastLimit)
+
+  /** Broadcast decision for a loop state of observed size `n` (a
+    * [[matCounted]]/[[matChanged]] metric, −1 when absent). Never under
+    * plan-only, where no action ran: the plan keeps the shuffle shape
+    * and forces the (lazy) hub plan on round 1, as it always has. */
+  private def stateIsSmall(state: DataFrame, n: Long): Boolean =
+    !planOnly(state) && n >= 0 && n <= bcastLimit(state)
 
   /** Conf key: out-degree budget per (src, salt) sub-key in the BFS/SSSP
     * relaxation join's SHUFFLE path. A γ≈3.4 power-law hub (the
@@ -356,7 +370,8 @@ object DFGraphAlgs {
       keys: Seq[String], e: DataFrame,
       probe: Long => Boolean): Option[(DataFrame, DataFrame)] = {
     val target = saltTarget(e)
-    val active = if (planOnly(e)) target <= 1L else probe(target)
+    val active = if (planOnly(e)) target <= 1L
+      else { saltDecisions.incrementAndGet(); probe(target) }
     if (!active) None
     else {
       val kcols = keys.map(col)
@@ -772,7 +787,7 @@ object DFGraphAlgs {
     // more cost than the 2 driver-blocking jobs per round the eager
     // form pays; the checkpoint also sizedCoalesces each round's state).
     for (_ <- 1 to rounds(rank, iters)) {
-      val small = !planOnly(rank) && nState >= 0 && nState <= bcastLimit(rank)
+      val small = stateIsSmall(rank, nState)
       val joined =
         if (small || salt.isEmpty)
           contrib.join(maybeBcast(rank, small), contrib("src") === rank("id"))
@@ -791,7 +806,9 @@ object DFGraphAlgs {
         .union(restart)
         .groupBy(col("seed"), col("id")).agg(rsum(col("part")).as("rank")))
       rank = r2
-      nState = n2
+      // −1 means "no action ran" (plan-only, see matCounted): never let
+      // it overwrite an observed size.
+      if (n2 >= 0) nState = n2
     }
     if (ownContrib) contrib.unpersist(false)
     rank
@@ -808,10 +825,14 @@ object DFGraphAlgs {
       coalesce(col("w"), lit(1.0)).as("w")))
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
-    var dist = mat(nodes.select(col("id"),
+    var (dist, n0) = matCounted(nodes.select(col("id"),
       when(col("id") === source, lit(0.0)).otherwise(lit(null).cast("double")).as("dist")))
-    val salt = saltPlan(e, knownMaxDeg = knownMaxDeg)
-    val small = !planOnly(dist) && dist.count() <= bcastLimit(dist)
+    // The state size comes from the init checkpoint's own metric row
+    // (see matCounted), and the hub plan is LAZY: a loop whose rounds
+    // all broadcast the state never reads it, so it never pays the
+    // degree aggregation + probe job (see stateIsSmall).
+    lazy val salt = saltPlan(e, knownMaxDeg = knownMaxDeg)
+    val small = stateIsSmall(dist, n0)
     var changing = true
     lastRoundsRun.set(0)
     for (_ <- 1 to rounds(dist, iters) if changing) {
@@ -1075,13 +1096,15 @@ object DFGraphAlgs {
     // row (see matChanged) — the initial state is one row per source, a
     // driver-side fact. Saves one count() job per round.
     var nState = sources.size.toLong
-    val salt = saltPlan(e, knownMaxDeg = knownMaxDeg)
+    // Lazy: built on the first round whose state outgrows the broadcast
+    // limit, never on a run that stays small (see shortestPaths).
+    lazy val salt = saltPlan(e, knownMaxDeg = knownMaxDeg)
     var changing = true
     lastRoundsRun.set(0)
     for (_ <- 1 to rounds(dist, iters) if changing) {
       // State grows round over round (up to sources × reached) — re-check
       // the carried size each round before choosing broadcast.
-      val small = !planOnly(dist) && nState <= bcastLimit(dist)
+      val small = stateIsSmall(dist, nState)
       val frontier =
         if (small || salt.isEmpty)
           e.join(maybeBcast(dist, small), e("src") === dist("id"))
@@ -1124,11 +1147,12 @@ object DFGraphAlgs {
       coalesce(col("w"), lit(1.0)).as("w")))
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
-    var st = mat(nodes.select(col("id"),
+    var (st, n0) = matCounted(nodes.select(col("id"),
       when(col("id") === source, lit(0.0)).otherwise(lit(null).cast("double")).as("dist"),
       lit(null).cast("long").as("pred")))
-    val salt = saltPlan(e, knownMaxDeg = knownMaxDeg)
-    val small = !planOnly(st) && st.count() <= bcastLimit(st)
+    // Counted init checkpoint + lazy hub plan — see shortestPaths.
+    lazy val salt = saltPlan(e, knownMaxDeg = knownMaxDeg)
+    val small = stateIsSmall(st, n0)
     var changing = true
     lastRoundsRun.set(0)
     for (_ <- 1 to rounds(st, iters) if changing) {
@@ -1179,9 +1203,10 @@ object DFGraphAlgs {
     val e = mat(edges.select(col("src"), col("dst")))
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
-    var comp = mat(nodes.select(col("id"), col("id").as("comp")))
-    val salt = saltPlan(e, knownMaxDeg = knownMaxDeg)
-    val small = !planOnly(comp) && comp.count() <= bcastLimit(comp)
+    var (comp, n0) = matCounted(nodes.select(col("id"), col("id").as("comp")))
+    // Counted init checkpoint + lazy hub plan — see shortestPaths.
+    lazy val salt = saltPlan(e, knownMaxDeg = knownMaxDeg)
+    val small = stateIsSmall(comp, n0)
     var changing = true
     lastRoundsRun.set(0)
     for (_ <- 1 to rounds(comp, iters) if changing) {
@@ -1306,8 +1331,10 @@ object DFGraphAlgs {
         // instantiates the session's non-serializable ObservationManager).
         val observed = next.observe("__graft_n", count(lit(1)).as("n"))
         e = mat(observed)
-        val n = observed.queryExecution.observedMetrics("__graft_n")
-          .getAs[Any]("n").asInstanceOf[Number].longValue
+        val row = observed.queryExecution.observedMetrics.get("__graft_n")
+        require(row.isDefined,
+          "kcore: the round checkpoint posted no __graft_n row count")
+        val n = row.get.getAs[Any]("n").asInstanceOf[Number].longValue
         changing = n != prevN
         prevN = n
       }

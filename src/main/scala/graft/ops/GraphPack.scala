@@ -900,8 +900,11 @@ object GraphPack {
       // materialization job already saw. Same double, same division,
       // bit-identical scores.
       def maxOf(df: org.apache.spark.sql.DataFrame, m: String): Column = {
-        val v = df.queryExecution.observedMetrics(m).getAs[Any]("m")
-        if (v == null) lit(null).cast("double") else lit(v.asInstanceOf[Double])
+        val row = df.queryExecution.observedMetrics.get(m)
+        require(row.isDefined, s"graph_hits: the checkpoint posted no $m normalizer")
+        val v = row.get.getAs[Any]("m")
+        if (v == null) lit(null).cast("double")
+        else lit(v.asInstanceOf[Number].doubleValue)
       }
       for (_ <- 1 to HitsIters) {
         // sizedCheckpoint = localCheckpoint + size-derived coalesce

@@ -52,7 +52,7 @@ object SearchPack {
       s"/ CAST($ls AS DOUBLE)), 6))) END"
   }
 
-  /** DuckDB twin of graft.api.Search.fuzzyScore (WRatio dispatch, incl.
+  /** DuckDB twin of graft.api.Search.fuzzyScoreWith (WRatio dispatch, incl.
     * the partial token-sort leg in the length-ratio ≥ 1.5 branch). */
   private def wratioSql(key: String, q: String): String = {
     val full = ratioSql(key, q)
@@ -90,12 +90,11 @@ object SearchPack {
     // normalized names with the reference's re-rank bonuses, threshold
     // 60, deterministic top-10 (ref fuzzy_search.py:54-94; settings.py:46
     // cutoff 60). Scored through the NATIVE wratio expression (one
-    // codegen'd JVM call per row) rather than the composed Column form —
-    // value-identical stage by stage (PropertySpec pins parity), but the
-    // Column form's partial legs are interpreted higher-order lambdas
-    // the scan pays per row; the switch also puts the native node under
-    // the DuckDB oracle directly. The Column form stays the API path
-    // (api.Search.fuzzyTopK) and keeps its parity pin.
+    // codegen'd JVM call per row), as api.Search.fuzzyTopK is, which
+    // puts the native node under the DuckDB oracle directly. The
+    // composed Column form (api.Search.fuzzyScoreWith) is only the
+    // readable reference the node is pinned against (InvariantSpec);
+    // its partial legs are interpreted higher-order lambdas.
     "search_fuzzy_topk" -> ((s, d) => {
       val key = col("__key")
       val base = call_function("wratio", key, lit(FuzzyQuery))

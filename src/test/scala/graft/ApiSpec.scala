@@ -196,6 +196,48 @@ class ApiSpec extends SparkSpec {
     assert(!sim.exists(p => p._1 == 4L || p._2 == 4L))
   }
 
+  test("search: fuzzyTopK equals the composed WRatio reference, through the native node") {
+    import graft.api.Search
+    // Names spanning every WRatio dispatch branch against a 10-char
+    // query: length ratio < 1.5, [1.5, 8) and >= 8 (one-char names and
+    // 80+-char names), empty and all-space names (empty after trim),
+    // runs of inner spaces, accents and case folded by normalizeKey.
+    val rng = new scala.util.Random(17)
+    val alphabet = "abn o  t"
+    def randStr(maxLen: Int): String =
+      Seq.fill(rng.nextInt(maxLen + 1))(alphabet(rng.nextInt(alphabet.length))).mkString
+    val names = Seq.fill(120)(randStr(24)) ++ Seq.fill(6)(randStr(6) * 15) ++
+      Seq("", " ", "   ", "a", "n", "Ann Barton", "BARTON ANN", "Ánn  Bärton",
+        "ann  barton  ", "annbarton", "ann barton " * 9)
+    // An RDD-backed frame: over a LocalRelation the optimizer folds the
+    // whole query to constants and no scoring node would be left to see.
+    val people = spark.sparkContext
+      .parallelize(names.zipWithIndex.map { case (n, i) => (i.toLong, n) }, 2)
+      .toDF("pid", "pname")
+    val q = "ann barton"
+    for ((minScore, k) <- Seq((0.0, 1000), (50.0, 10), (60.0, 40), (95.0, 40))) {
+      val got = Graft.search.fuzzyTopK(people, "pid", "pname", q, minScore, k)
+      val key = Search.normalizeKey(col("pname"))
+      val ref = people
+        .select(col("pid"), col("pname"),
+          Search.fuzzyScoreWith(key, Search.tokenSort(key), q).as("score"))
+        .filter(col("score") >= minScore)
+        .orderBy(col("score").desc, col("pid").asc)
+        .limit(k)
+      assert(got.collect().toSeq == ref.collect().toSeq,
+        s"fuzzyTopK($minScore, $k) differs from the composed reference")
+      // Scored by the native node: a fall-back to the composed form
+      // would bring its transform lambdas back into the plan.
+      val plan = got.queryExecution.optimizedPlan
+      val exprs = plan.collect { case p => p.expressions }.flatten
+      assert(exprs.exists(_.exists(_.isInstanceOf[graft.functions.WRatio])),
+        s"no WRatio node in\n$plan")
+      assert(!exprs.exists(_.exists(
+          _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.LambdaFunction])),
+        s"lambda in the fuzzyTopK plan\n$plan")
+    }
+  }
+
   test("search: sizedBlockedSimJoin derives the suffix length from corpus size") {
     // The l ∝ log_σ(n) contract: blocks needed = ceil(n/target), l =
     // base-σ digit count of (blocks-1). Integer-exact — the same values

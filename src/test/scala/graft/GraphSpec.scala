@@ -264,6 +264,40 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("hub plans are lazy: broadcast rounds never decide salting, forced shuffle rounds salt") {
+    // shortestPaths, multiSourceShortestPaths, shortestPathsWithPred and
+    // connectedComponents build their hub plan only when a round takes
+    // the shuffle path. On the default (broadcast) path no salting
+    // decision may run at all; with the shuffle path forced and every
+    // key salted, each loop must decide once and still return the
+    // default path's rows exactly.
+    val sym = edgeDF.select($"src", $"dst")
+      .union(edgeDF.select($"dst".as("src"), $"src".as("dst")))
+    def four(): Seq[Set[String]] = Seq(
+      DFGraphAlgs.shortestPaths(edgeDF, 1L, 6),
+      DFGraphAlgs.multiSourceShortestPaths(edgeDF, Seq(1L, 3L, 5L), 6),
+      DFGraphAlgs.shortestPathsWithPred(edgeDF, 1L, 6),
+      DFGraphAlgs.connectedComponents(sym, 6)
+    ).map(_.collect().map(_.toString).toSet)
+    val before = DFGraphAlgs.saltDecisions.get
+    val base = four()
+    assert(DFGraphAlgs.saltDecisions.get == before,
+      "a broadcast-path loop built its hub plan")
+    spark.conf.set(DFGraphAlgs.StateBroadcastLimitConf, "0")
+    spark.conf.set(DFGraphAlgs.SaltTargetDegConf, "1")
+    try {
+      val forced = four()
+      assert(DFGraphAlgs.saltDecisions.get - before == 4,
+        "each shuffle-path loop must build its hub plan exactly once")
+      forced.zip(base).zipWithIndex.foreach { case ((f, b), i) =>
+        assert(f == b, s"loop $i: salted shuffle rows differ from broadcast rows")
+      }
+    } finally {
+      spark.conf.unset(DFGraphAlgs.StateBroadcastLimitConf)
+      spark.conf.unset(DFGraphAlgs.SaltTargetDegConf)
+    }
+  }
+
   test("salting preserves the PageRank family bit-for-bit") {
     // The contribution join in pageRank / pageRankByRel /
     // personalizedPageRank carries the same hub exposure as the
